@@ -68,7 +68,6 @@ class ConstraintSuite:
         self,
         n_buckets: int = N_BUCKETS_DEFAULT,
         use_arrow_udf: bool = False,
-        check_uniqueness: bool = True,
         referential_mode: str = "broadcast",
         bloom_m_bits: int = 1 << 24,
         bloom_k: int = 5,
@@ -83,7 +82,6 @@ class ConstraintSuite:
             )
         self.n_buckets = n_buckets
         self.use_arrow_udf = use_arrow_udf
-        self.check_uniqueness = check_uniqueness
         self.referential_mode = referential_mode
         self.bloom_m_bits = bloom_m_bits
         self.bloom_k = bloom_k
@@ -224,33 +222,17 @@ class ConstraintSuite:
     # --- suite --------------------------------------------------------------
 
     def active_constraints(self, with_referential: bool) -> list[str]:
-        ids = list(ROW_CONSTRAINTS)
-        if self.check_uniqueness:
-            ids.append(C_DOC_ID_UNIQUE)
+        ids = [*ROW_CONSTRAINTS, C_DOC_ID_UNIQUE]
         if with_referential:
             ids.append(C_MEDIA_REF_REFERENTIAL)
         return ids
 
-    def violations(
-        self, docs: DataFrame, asset_catalog: DataFrame | None = None
-    ) -> DataFrame:
-        docs_p = self.with_partition_id(docs)
-        out = self.row_violations(docs_p)
-        if self.check_uniqueness:
-            out = out.unionByName(self.uniqueness_violations(docs_p))
-        if asset_catalog is not None:
-            out = out.unionByName(
-                self.referential_violations(docs_p, asset_catalog)
-            )
-        return out
-
     def summarize(
         self,
-        docs: DataFrame,
+        docs_p: DataFrame,
         violations: DataFrame,
         with_referential: bool,
-        dups: DataFrame | None = None,
-        docs_pre_partitioned: bool = False,
+        dups: DataFrame,
     ) -> DataFrame:
         """Per-(constraint, partition) pass/fail summary.
 
@@ -261,50 +243,35 @@ class ConstraintSuite:
         one violation of the constraint. Shape follows the reference's
         validation_summary (``synthetic_validation_demo.py:96-113``).
 
-        Scale note: when the uniqueness stage's duplicate keys are
-        available (``dups``), the distinct count per partition is
+        ``docs_p`` is ``with_partition_id(docs)`` and ``dups`` is
+        ``duplicate_keys(docs_p)``. The distinct count per partition is
         derived as ``count(*) − Σ(n−1)`` over the (tiny) duplicate set
         — a map-side-combined row count instead of a corpus-wide
         distinct hash aggregation (which would build per-task hash
         tables of every doc_id and spill at scale).
-
-        ``docs_pre_partitioned`` declares that ``docs`` ALREADY carries
-        this suite's content-addressed ``partition_id`` (``run()``
-        passes its own ``docs_p``), skipping one analyzed projection
-        per suite run. It is an explicit flag, not a column sniff: a
-        caller's unrelated ``partition_id`` column (physical ids, a
-        different n_buckets) must NOT be trusted silently — the dups
-        correction and the violations frame key by
-        ``stable_partition_id(n_buckets)`` and would mis-join.
         """
-        docs_p = docs if docs_pre_partitioned else self.with_partition_id(docs)
-        if dups is not None:
-            row_counts = docs_p.groupBy("partition_id").agg(
-                F.count(F.lit(1)).alias("_n_rows")
+        row_counts = docs_p.groupBy("partition_id").agg(
+            F.count(F.lit(1)).alias("_n_rows")
+        )
+        extra = (
+            dups.select(
+                stable_partition_id(F.col("doc_id"), self.n_buckets).alias(
+                    "partition_id"
+                ),
+                (F.col("n") - 1).alias("_extra"),
             )
-            extra = (
-                dups.select(
-                    stable_partition_id(F.col("doc_id"), self.n_buckets).alias(
-                        "partition_id"
-                    ),
-                    (F.col("n") - 1).alias("_extra"),
-                )
-                .groupBy("partition_id")
-                .agg(F.sum("_extra").alias("_extra"))
+            .groupBy("partition_id")
+            .agg(F.sum("_extra").alias("_extra"))
+        )
+        totals = (
+            row_counts.join(F.broadcast(extra), "partition_id", "left")
+            .select(
+                "partition_id",
+                (
+                    F.col("_n_rows") - F.coalesce(F.col("_extra"), F.lit(0))
+                ).alias("total"),
             )
-            totals = (
-                row_counts.join(F.broadcast(extra), "partition_id", "left")
-                .select(
-                    "partition_id",
-                    (
-                        F.col("_n_rows") - F.coalesce(F.col("_extra"), F.lit(0))
-                    ).alias("total"),
-                )
-            )
-        else:
-            totals = docs_p.groupBy("partition_id").agg(
-                F.countDistinct("doc_id").alias("total")
-            )
+        )
         # constraint × partition grid via a literal-array explode — pure
         # JVM; a local createDataFrame here would pay Python-runner
         # startup (~seconds) for a 7-row dimension
@@ -340,38 +307,21 @@ class ConstraintSuite:
         self,
         docs: DataFrame,
         asset_catalog: DataFrame | None = None,
-        materialize: bool = True,
     ) -> SuiteResult:
-        """Full suite. With ``materialize`` (default) the violations
-        frame is persisted so the summary reuses it instead of
-        recomputing the row-constraint scan — violations are tiny
-        relative to the corpus (call ``SuiteResult.unpersist()`` when
-        done)."""
+        """Full suite. The violations frame is persisted so the summary
+        reuses it instead of recomputing the row-constraint scan —
+        violations are tiny relative to the corpus (call
+        ``SuiteResult.unpersist()`` when done)."""
         docs_p = self.with_partition_id(docs)
-        dups = None
-        persisted: list[DataFrame] = []
-        out = self.row_violations(docs_p)
-        if self.check_uniqueness:
-            # duplicate keys are tiny (violations only); persisting them
-            # lets both the violation rows and the summary's
-            # distinct-doc totals reuse one salted aggregation
-            dups = self.duplicate_keys(docs_p)
-            if materialize:
-                dups = dups.persist()
-                persisted.append(dups)
-            out = out.unionByName(self.uniqueness_violations_from(dups))
+        # duplicate keys are tiny (violations only); persisting them
+        # lets both the violation rows and the summary's distinct-doc
+        # totals reuse one aggregation
+        dups = self.duplicate_keys(docs_p).persist()
+        out = self.row_violations(docs_p).unionByName(
+            self.uniqueness_violations_from(dups)
+        )
         if asset_catalog is not None:
             out = out.unionByName(self.referential_violations(docs_p, asset_catalog))
-        if materialize:
-            out = out.persist()
-            persisted.append(out)
-        summary = self.summarize(
-            docs_p,
-            out,
-            asset_catalog is not None,
-            dups=dups,
-            docs_pre_partitioned=True,
-        )
-        return SuiteResult(
-            violations=out, summary=summary, persisted=tuple(persisted)
-        )
+        out = out.persist()
+        summary = self.summarize(docs_p, out, asset_catalog is not None, dups)
+        return SuiteResult(violations=out, summary=summary, persisted=(dups, out))

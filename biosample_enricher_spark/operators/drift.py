@@ -1,5 +1,6 @@
 """Distribution-drift constraints: two-sample Kolmogorov–Smirnov over
-span-length and kind-frequency histograms (SURVEY.md §2.9).
+span-length and kind-frequency histograms (SURVEY.md §2.9), plus the
+TV, PSI and EMD tiers over the same histogram inputs.
 
 Reference analog: before/after coverage deltas and improvement
 categorization (``/root/reference/biosample_enricher/weather/metrics.py:
@@ -8,12 +9,17 @@ categorization (``/root/reference/biosample_enricher/weather/metrics.py:
 test instead of hand-binned categories.
 
 Scale shape: the raw corpora are first reduced to tiny histogram tables
-by distributed ``groupBy(bucket).count()`` (map-side partial agg bounds
-the shuffle to |buckets| × partitions rows — skew-immune), then the KS
-statistic is computed per metric group inside a grouped-map Arrow UDF
-(``applyInPandas``) over the aggregated rows. Python only ever sees
-histograms, never documents. The weighted two-sample KS on binned data
-is exact for the binned distributions: D = max_bucket |CDF_a - CDF_b|.
+by distributed ``groupBy(keys..., bucket).count()`` (map-side partial
+agg bounds the shuffle to |buckets| × partitions rows — skew-immune).
+``_align`` full-outer-joins the two histograms on ``keys + bucket`` with
+zero-filled counts for every statistic. TV, PSI and EMD fold the aligned
+rows with expressions; KS is ONE grouped-map Arrow UDF
+(``applyInPandas``) keyed by ``constraint_id`` plus optional keys —
+``drift_check`` feeds both constraints to one call, and
+``drift_check_by_partition`` adds ``partition_id`` to the keys. Python
+only ever sees histograms, never documents. The weighted two-sample KS
+on binned data is exact for the binned distributions:
+D = max_bucket |CDF_a - CDF_b|.
 
 The pass threshold uses the standard large-sample critical value
 D_crit = c(alpha) * sqrt((n_a + n_b) / (n_a * n_b)), c(0.05) ≈ 1.358.
@@ -22,18 +28,21 @@ D_crit = c(alpha) * sqrt((n_a + n_b) / (n_a * n_b)), c(0.05) ≈ 1.358.
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..constraints.core import stable_partition_id
 from ..spec import C_DRIFT_KIND_FREQ, C_DRIFT_SPAN_LEN
 from .stats import kind_histogram, span_length_histogram
 
-KS_RESULT_SCHEMA = (
-    "constraint_id string, ks_stat double, n_base long, n_cur long, "
-    "d_crit double, passed boolean"
+_KS_STATS_SCHEMA = (
+    "ks_stat double, n_base long, n_cur long, d_crit double, passed boolean"
 )
+KS_RESULT_SCHEMA = "constraint_id string, " + _KS_STATS_SCHEMA
 
 _KS_C_ALPHA_05 = 1.3581015157406195  # sqrt(-0.5 * ln(0.05/2))
 
@@ -79,6 +88,63 @@ def _ks_group(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def _align(
+    base_hist: DataFrame,
+    cur_hist: DataFrame,
+    bucket_col: str,
+    keys: Sequence[str] = (),
+) -> DataFrame:
+    """Full-outer join of two ``(keys..., bucket_col, n)`` histograms on
+    ``keys + bucket`` → ``(keys..., bucket, n_base, n_cur)`` with the
+    counts of a bucket missing on one side zero-filled."""
+    a = base_hist.select(
+        *keys, F.col(bucket_col).alias("bucket"), F.col("n").alias("n_base")
+    )
+    b = cur_hist.select(
+        *keys, F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur")
+    )
+    return a.join(b, [*keys, "bucket"], "full_outer").select(
+        *keys,
+        "bucket",
+        F.coalesce("n_base", F.lit(0)).alias("n_base"),
+        F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
+    )
+
+
+def _ks(aligned: dict[str, DataFrame], keys: Sequence[str] = ()) -> DataFrame:
+    """One grouped-map KS over the ``_align`` output of each constraint
+    id in ``aligned``: their rows are unioned and ``_ks_group`` runs per
+    ``(constraint_id, keys...)`` group; each result row carries its key
+    values after ``constraint_id``."""
+    ks_input = reduce(
+        DataFrame.unionByName,
+        [
+            hist.select(
+                F.lit(cid).alias("constraint_id"),
+                *keys,
+                F.col("bucket").cast("string").alias("bucket"),
+                "n_base",
+                "n_cur",
+            )
+            for cid, hist in aligned.items()
+        ],
+    )
+    key_fields = "".join(
+        f"{f.name} {f.dataType.simpleString()}, "
+        for f in ks_input.select(*keys).schema
+    )
+
+    def ks_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+        res = _ks_group(pdf)
+        for i, k in enumerate(keys, 1):
+            res.insert(i, k, pdf[k].iloc[0])
+        return res
+
+    return ks_input.groupBy("constraint_id", *keys).applyInPandas(
+        ks_rows, f"constraint_id string, {key_fields}{_KS_STATS_SCHEMA}"
+    )
+
+
 def ks_from_histograms(
     base_hist: DataFrame,
     cur_hist: DataFrame,
@@ -87,22 +153,30 @@ def ks_from_histograms(
 ) -> DataFrame:
     """Align two histograms on their bucket key and compute the KS
     statistic in a grouped-map Arrow UDF."""
-    a = base_hist.select(
-        F.col(bucket_col).alias("bucket"), F.col("n").alias("n_base")
+    return _ks({constraint_id: _align(base_hist, cur_hist, bucket_col)})
+
+
+def _drift_ks(
+    baseline_docs: DataFrame,
+    current_docs: DataFrame,
+    span_len_bucket_width: int,
+    keys: Sequence[str] = (),
+) -> DataFrame:
+    """Both KS drift constraints in one grouped map over the aligned
+    span-length and kind histograms, grouped by ``keys`` too."""
+    span_len = _align(
+        span_length_histogram(baseline_docs, span_len_bucket_width, keys),
+        span_length_histogram(current_docs, span_len_bucket_width, keys),
+        "bucket",
+        keys,
     )
-    b = cur_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur"))
-    joined = (
-        a.join(b, "bucket", "full_outer")
-        .select(
-            F.lit(constraint_id).alias("constraint_id"),
-            F.col("bucket").cast("string").alias("bucket"),
-            F.coalesce("n_base", F.lit(0)).alias("n_base"),
-            F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
-        )
+    kind_freq = _align(
+        kind_histogram(baseline_docs, keys),
+        kind_histogram(current_docs, keys),
+        "kind",
+        keys,
     )
-    return joined.groupBy("constraint_id").applyInPandas(
-        lambda pdf: _ks_group(pdf), KS_RESULT_SCHEMA
-    )
+    return _ks({C_DRIFT_SPAN_LEN: span_len, C_DRIFT_KIND_FREQ: kind_freq}, keys)
 
 
 def drift_check(
@@ -112,20 +186,9 @@ def drift_check(
 ) -> DataFrame:
     """Run both drift constraints baseline-vs-current → one result row
     per constraint: (constraint_id, ks_stat, n_base, n_cur, d_crit,
-    passed)."""
-    span_len = ks_from_histograms(
-        span_length_histogram(baseline_docs, span_len_bucket_width),
-        span_length_histogram(current_docs, span_len_bucket_width),
-        C_DRIFT_SPAN_LEN,
-        "bucket",
-    )
-    kind_freq = ks_from_histograms(
-        kind_histogram(baseline_docs),
-        kind_histogram(current_docs),
-        C_DRIFT_KIND_FREQ,
-        "kind",
-    )
-    return span_len.unionByName(kind_freq)
+    passed). Row order is unspecified; sort by ``constraint_id`` when
+    it matters."""
+    return _drift_ks(baseline_docs, current_docs, span_len_bucket_width)
 
 
 def tv_from_histograms(
@@ -144,14 +207,7 @@ def tv_from_histograms(
     statistic is one aggregate — no Python at all, so this tier also
     serves as the SQL-oracled drift path.
     """
-    a = base_hist.select(
-        F.col(bucket_col).alias("bucket"), F.col("n").alias("n_base")
-    )
-    b = cur_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur"))
-    joined = a.join(b, "bucket", "full_outer").select(
-        F.coalesce("n_base", F.lit(0)).alias("n_base"),
-        F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
-    )
+    joined = _align(base_hist, cur_hist, bucket_col)
     # whole-frame window over the tiny aggregated histogram (|buckets|
     # rows) to turn counts into probabilities before the final fold.
     # Zero-mass guard (nullif → null division → coalesce 0) keeps the
@@ -212,14 +268,7 @@ def psi_from_histograms(
     <0.1 stable, 0.1–0.25 moderate, >0.25 major shift. Pure
     expressions end-to-end like TV — histograms are the only input, so
     Python never sees data rows."""
-    a = base_hist.select(
-        F.col(bucket_col).alias("bucket"), F.col("n").alias("n_base")
-    )
-    b = cur_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur"))
-    joined = a.join(b, "bucket", "full_outer").select(
-        F.coalesce("n_base", F.lit(0)).alias("n_base"),
-        F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
-    )
+    joined = _align(base_hist, cur_hist, bucket_col)
     w = Window.partitionBy()
 
     def prop(col: str) -> Column:
@@ -266,90 +315,30 @@ def drift_check_by_partition(
     corpus-global verdict (and the checkpoint table can carry drift
     lineage rows next to the row-scope ones).
 
-    Scale shape is unchanged: distributed groupBy((partition, bucket))
-    histograms first — shuffle bounded by |partitions| × |buckets| —
-    then the grouped-map KS over each partition's tiny histogram. The
-    applyInPandas key gains partition_id, so Python still only ever
-    sees histograms.
+    It is ``drift_check`` with ``partition_id`` added to the keys:
+    distributed groupBy((partition, bucket)) histograms first — shuffle
+    bounded by |partitions| × |buckets| — then the same single grouped
+    map, keyed by (constraint_id, partition_id), so Python still only
+    ever sees histograms.
 
     ``partition_col`` names a caller-supplied partition-id column on
     BOTH input frames (any deterministic int key — e.g. an
     SQL-portable ``doc_id % k`` when an external oracle must replay
     the bucketing); default is the engine's content-addressed
     ``stable_partition_id`` (pmod(xxhash64(doc_id), n_buckets))."""
-    from ..constraints.core import stable_partition_id
 
-    def hists(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    def keyed(docs: DataFrame) -> DataFrame:
         if partition_col is None:
-            p = docs.withColumn(
-                "partition_id",
-                stable_partition_id(F.col("doc_id"), n_buckets),
-            )
+            pid = stable_partition_id(F.col("doc_id"), n_buckets)
         else:
-            p = docs.withColumn(
-                "partition_id", F.col(partition_col).cast("int")
-            )
-        spans = p.select("partition_id", F.explode("spans").alias("s"))
-        span_len = (
-            spans.where(F.col("s.text").isNotNull())
-            .select(
-                "partition_id",
-                (
-                    F.floor(F.length("s.text") / span_len_bucket_width)
-                    * span_len_bucket_width
-                )
-                .cast("long")
-                .alias("bucket"),
-            )
-            .groupBy("partition_id", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        kinds = (
-            spans.select(
-                "partition_id",
-                F.coalesce(F.col("s.kind"), F.lit("<null>")).alias("bucket"),
-            )
-            .groupBy("partition_id", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        return span_len, kinds
+            pid = F.col(partition_col).cast("int")
+        return docs.withColumn("partition_id", pid)
 
-    base_len, base_kind = hists(baseline_docs)
-    cur_len, cur_kind = hists(current_docs)
-
-    def ks_partitioned(
-        base: DataFrame, cur: DataFrame, constraint_id: str
-    ) -> DataFrame:
-        a = base.select(
-            "partition_id", F.col("bucket"), F.col("n").alias("n_base")
-        )
-        b = cur.select(
-            "partition_id", F.col("bucket"), F.col("n").alias("n_cur")
-        )
-        joined = a.join(b, ["partition_id", "bucket"], "full_outer").select(
-            F.lit(constraint_id).alias("constraint_id"),
-            "partition_id",
-            F.col("bucket").cast("string").alias("bucket"),
-            F.coalesce("n_base", F.lit(0)).alias("n_base"),
-            F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
-        )
-        out_schema = (
-            "constraint_id string, partition_id int, ks_stat double, "
-            "n_base long, n_cur long, d_crit double, passed boolean"
-        )
-
-        def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            pid = int(pdf["partition_id"].iloc[0])
-            res = _ks_group(pdf.drop(columns=["partition_id"]))
-            res.insert(1, "partition_id", pid)
-            return res
-
-        return joined.groupBy("constraint_id", "partition_id").applyInPandas(
-            per_group, out_schema
-        )
-
-    return ks_partitioned(base_len, cur_len, C_DRIFT_SPAN_LEN).unionByName(
-        ks_partitioned(base_kind, cur_kind, C_DRIFT_KIND_FREQ)
+    return _drift_ks(
+        keyed(baseline_docs),
+        keyed(current_docs),
+        span_len_bucket_width,
+        ("partition_id",),
     )
 
 
@@ -393,18 +382,14 @@ def emd_from_histograms(
     Degenerate verdicts mirror the TV tier: one empty side = maximal
     drift (emd null, fails); both empty = no evidence (emd 0.0, passes).
     """
-    a = base_hist.select(
-        F.col(bucket_col).cast("long").alias("bucket"),
-        F.col("n").alias("n_base"),
-    )
-    b = cur_hist.select(
-        F.col(bucket_col).cast("long").alias("bucket"),
-        F.col("n").alias("n_cur"),
-    )
-    joined = a.join(b, "bucket", "full_outer").select(
+    def long_buckets(hist: DataFrame) -> DataFrame:
+        return hist.withColumn(bucket_col, F.col(bucket_col).cast("long"))
+
+    aligned = _align(long_buckets(base_hist), long_buckets(cur_hist), bucket_col)
+    joined = aligned.select(
         "bucket",
-        F.coalesce("n_base", F.lit(0)).cast("long").alias("n_base"),
-        F.coalesce("n_cur", F.lit(0)).cast("long").alias("n_cur"),
+        F.col("n_base").cast("long").alias("n_base"),
+        F.col("n_cur").cast("long").alias("n_cur"),
     )
     w = Window.partitionBy().orderBy("bucket")
     wall = Window.partitionBy()

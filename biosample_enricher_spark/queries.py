@@ -1776,7 +1776,7 @@ def drift_ks_nchars(spark, sf_dir):
     """§2.9 drift with an exact SQL oracle: two-sample KS over the
     n_chars histogram (bucket width 64), baseline = even doc_ids vs
     current = odd doc_ids. Runs the REAL engine path — distributed
-    histogram reduction + applyInPandas KS (operators/drift.py:41-105);
+    histogram reduction + applyInPandas KS (drift.ks_from_histograms);
     the oracle recomputes D = max|CDF_a − CDF_b| with window cumsums.
     Exact float equality holds because both sides divide exact integer
     cumsums by exact integer totals in IEEE doubles."""
@@ -2567,7 +2567,7 @@ def drift_ks_by_partition(spark, sf_dir):
 
     r5 upgrade (r4 VERDICT #3): now EXACTLY SQL-oracled. The engine
     path is unchanged — distributed per-(partition, bucket) histogram
-    reduction + grouped-map Arrow KS (operators/drift.py:255) — but
+    reduction + grouped-map Arrow KS (drift.py, one grouped map) — but
     the partition key is supplied via ``partition_col`` as the
     SQL-portable ``doc_id % 8`` instead of the default
     pmod(xxhash64(doc_id), n) that DuckDB cannot replay; the oracle

@@ -23,8 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..constraints import exprs
-from ..constraints.core import stable_partition_id
+from ..constraints.core import ConstraintSuite, stable_partition_id
 from ..spec import (
     C_DOC_ID_UNIQUE,
     DOCUMENTS_SCHEMA,
@@ -52,27 +51,13 @@ def streaming_violations(
     docs: DataFrame, n_buckets: int = N_BUCKETS_DEFAULT
 ) -> DataFrame:
     """Row-scope violations over a streaming documents frame — the
-    exact batch expressions (no Python, no state), so every micro-batch
-    is one codegen'd projection. Referential needs the asset catalog
-    and stays in the batch/resume tier; in-stream uniqueness is the
-    stateful ``streaming_duplicate_violations`` below."""
-    return (
-        docs.withColumn(
-            "partition_id", stable_partition_id(F.col("doc_id"), n_buckets)
-        )
-        .select(
-            "partition_id",
-            "doc_id",
-            F.explode(exprs.span_violations_canonical()).alias("v"),
-        )
-        .select(
-            "partition_id",
-            "doc_id",
-            F.col("v.constraint_id").alias("constraint_id"),
-            F.col("v.field").alias("field"),
-            F.col("v.message").alias("message"),
-        )
-    )
+    batch suite's own row projection (expression fold: no Python, no
+    state), so every micro-batch is one codegen'd projection.
+    Referential needs the asset catalog and stays in the batch/resume
+    tier; in-stream uniqueness is the stateful
+    ``streaming_duplicate_violations`` below."""
+    suite = ConstraintSuite(n_buckets=n_buckets)
+    return suite.row_violations(suite.with_partition_id(docs))
 
 
 def windowed_violation_counts(

@@ -184,6 +184,8 @@ def main(argv: list[str]) -> None:
     if args.baseline:
         base = spark.read.parquet(args.baseline)
         drift_rows = drift_check(base, docs).collect()
+        # the grouped map emits rows in no fixed order; sort so the JSON
+        # report does not depend on it
         report["drift"] = [
             {
                 "constraint_id": r.constraint_id,
@@ -191,7 +193,7 @@ def main(argv: list[str]) -> None:
                 "d_crit": r.d_crit,
                 "passed": r.passed,
             }
-            for r in drift_rows
+            for r in sorted(drift_rows, key=lambda r: r.constraint_id)
         ]
         if args.drift_by_partition:
             from pyspark.sql import functions as F

@@ -20,7 +20,7 @@ N_DOCS = 400
 
 
 def _row_viols(spark, docs, use_arrow_udf):
-    suite = ConstraintSuite(use_arrow_udf=use_arrow_udf, check_uniqueness=False)
+    suite = ConstraintSuite(use_arrow_udf=use_arrow_udf)
     df = suite.row_violations(suite.with_partition_id(docs))
     return sorted(
         (r.doc_id, r.constraint_id, r.field, r.message)

@@ -71,7 +71,7 @@ def test_fuzzed_docs_three_way_parity(spark, batch):
 
     results = []
     for use_arrow in (False, True):
-        suite = ConstraintSuite(use_arrow_udf=use_arrow, check_uniqueness=False)
+        suite = ConstraintSuite(use_arrow_udf=use_arrow)
         got = sorted(
             (r.doc_id, r.constraint_id, r.field, r.message)
             for r in suite.row_violations(suite.with_partition_id(df)).collect()

@@ -74,6 +74,16 @@ def test_udf_path_uses_arrow_not_pickle(spark):
     assert "BatchEvalPython" not in p
 
 
+def test_drift_check_is_one_grouped_map(spark):
+    """Both KS drift constraints run in ONE Python grouped-map stage:
+    the aligned span-length and kind histograms are unioned first."""
+    from biosample_enricher_spark.operators.drift import drift_check
+
+    a = gen_documents(spark, 200, GenParams(seed=1))
+    b = gen_documents(spark, 200, GenParams(seed=2))
+    assert plan(drift_check(a, b)).count("FlatMapGroupsInPandas") == 1
+
+
 def test_nested_field_pruning_for_referential(spark):
     """The referential probe must not read span text payloads — only
     kind/media_ref reach the scan after nested-schema pruning."""

@@ -11,20 +11,29 @@ Python cannot fake it), and a daemon process must exist afterwards.
 
 from __future__ import annotations
 
+import os
 import subprocess
 
 from biosample_enricher_spark.session import _prewarm_python_workers
 
 
 def _daemon_count() -> int:
+    """pyspark.daemon / pyspark.worker processes that descend from this
+    test's own Python process (its JVM forks the daemon), so Spark
+    sessions of other processes on the host are not counted."""
     out = subprocess.run(
-        ["ps", "-eo", "cmd"], capture_output=True, text=True
+        ["ps", "-eo", "pid,ppid,cmd"], capture_output=True, text=True
     ).stdout
-    return sum(
-        1
-        for line in out.splitlines()
-        if "pyspark.daemon" in line or "pyspark.worker" in line
-    )
+    children: dict[int, list[tuple[int, str]]] = {}
+    for line in out.splitlines()[1:]:
+        pid, ppid, *cmd = line.split(None, 2)
+        children.setdefault(int(ppid), []).append((int(pid), " ".join(cmd)))
+    n, todo = 0, [os.getpid()]
+    while todo:
+        for pid, cmd in children.get(todo.pop(), []):
+            n += "pyspark.daemon" in cmd or "pyspark.worker" in cmd
+            todo.append(pid)
+    return n
 
 
 def test_prewarm_executes_udf_job(spark, monkeypatch):

@@ -32,7 +32,7 @@ def corpus_dir(spark):
 
 
 def _batch_rows(spark, path):
-    suite = ConstraintSuite(check_uniqueness=False)
+    suite = ConstraintSuite()
     docs = spark.read.parquet(path)
     return sorted(
         (r.partition_id, r.doc_id, r.constraint_id, r.field, r.message)
@@ -94,7 +94,7 @@ def test_windowed_violation_counts_with_watermark(spark, corpus_dir):
         for r in spark.table("winviol").collect()
     }
 
-    suite = ConstraintSuite(check_uniqueness=False)
+    suite = ConstraintSuite()
     bdocs = spark.read.parquet(corpus_dir)
     bviol = suite.row_violations(suite.with_partition_id(bdocs)).withColumn(
         "event_ts",
