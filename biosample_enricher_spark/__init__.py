@@ -12,8 +12,9 @@ tables of interleaved text+media documents:
 - uniqueness of ``doc_id`` via salted two-stage hash aggregation —
   analog of the reference's ID-dedup semantics (``adapters.py:327-338``),
 - referential integrity of ``media_ref`` against an asset catalog via
-  broadcast left-anti join — analog of cross-collection ``$in`` lookups
-  (``adapters.py:610-640``),
+  one left-anti join whose strategy Spark picks from the catalog's size
+  (broadcast while it is small) — analog of cross-collection ``$in``
+  lookups (``adapters.py:610-640``),
 - distribution-drift detection with two-sample KS statistics over
   span-length and kind-frequency histograms — analog of before/after
   coverage deltas (``metrics/reporter.py``, ``weather/metrics.py``),

@@ -6,7 +6,7 @@ Compiles the declarative suite into one DataFrame pipeline:
       → stable partition_id (content-addressed bucket)
       → row-scope violations  (Column-expr fold OR Arrow UDF, §exprs/§udf)
       → uniqueness violations (salted two-stage aggregation)
-      → referential violations (broadcast left-anti join vs asset catalog)
+      → referential violations (left-anti join vs asset catalog)
       → union → violations(partition_id, doc_id, constraint_id, field, message)
       → per-(constraint, partition) summary with pass/fail counts
 
@@ -23,8 +23,10 @@ Scale posture:
   stage pre-counts per physical partition, bounding any reducer's
   input for hot keys to one row per map task (north_rule semantics,
   one Exchange).
-- the asset catalog is broadcast; the probe side only carries
-  ``(partition_id, doc_id, pos, media_ref)`` after nested-field pruning.
+- the referential check is one planner-chosen left-anti join: a
+  broadcast while the catalog is small, a shuffled join once it is
+  not; the probe side only carries ``(partition_id, doc_id, pos,
+  media_ref)`` after nested-field pruning.
 """
 
 from __future__ import annotations
@@ -68,23 +70,9 @@ class ConstraintSuite:
         self,
         n_buckets: int = N_BUCKETS_DEFAULT,
         use_arrow_udf: bool = False,
-        referential_mode: str = "broadcast",
-        bloom_m_bits: int = 1 << 24,
-        bloom_k: int = 5,
     ) -> None:
-        if referential_mode not in ("broadcast", "bloom"):
-            # ValueError, not assert: under python -O an assert is
-            # stripped and a typo would silently run the broadcast
-            # tier against the huge catalog the bloom tier exists for
-            raise ValueError(
-                f"referential_mode must be 'broadcast' or 'bloom', "
-                f"got {referential_mode!r}"
-            )
         self.n_buckets = n_buckets
         self.use_arrow_udf = use_arrow_udf
-        self.referential_mode = referential_mode
-        self.bloom_m_bits = bloom_m_bits
-        self.bloom_k = bloom_k
 
     # --- pieces -------------------------------------------------------------
 
@@ -154,17 +142,14 @@ class ConstraintSuite:
 
         Probe side is pruned to ``(partition_id, doc_id, pos,
         media_ref)`` before the join; the catalog dimension is pruned
-        to its key. Two tiers, selected by ``referential_mode``:
-
-        - ``"broadcast"`` (default): exact broadcast left-anti join —
-          right while the catalog key set fits an exact broadcast.
-        - ``"bloom"``: the operators/bloom.py pre-filter tier for
-          catalogs past broadcast size (a 10⁹-key exact set is 8+
-          GB; the bloom is m/8 bytes — 2 MiB at the default 2²⁴
-          bits): bloom-failing refs are definite violations with
-          zero shuffle, bloom-passing refs are verified by the exact
-          anti-join. Output provably equals the broadcast tier
-          (equality pinned in tests/test_suite_ops.py).
+        to its key. One plain left-anti join with no hint: Spark picks
+        the strategy from the catalog's size — a static broadcast
+        under ``autoBroadcastJoinThreshold``, AQE's runtime conversion
+        above it, a shuffled join at corpus scale (plans pinned in
+        tests/test_plans.py). The Bloom pre-filter (operators/bloom.py,
+        registry query ``v6_bloom_referential``) is an operator, not a
+        suite tier: with misses as rare as the suite's (~1% of probe
+        rows) its exact stage would still join nearly every row.
 
         Reference analog: cross-collection ``$in`` membership lookups
         (``/root/reference/biosample_enricher/adapters.py:610-640``).
@@ -193,22 +178,9 @@ class ConstraintSuite:
                 F.col("s.media_ref").alias("media_ref"),
             )
         )
-        catalog_keys = asset_catalog.select("media_ref")
-        if self.referential_mode == "bloom":
-            from ..operators.bloom import bloom_referential_violations
-
-            dangling = bloom_referential_violations(
-                media,
-                "media_ref",
-                catalog_keys,
-                "media_ref",
-                m_bits=self.bloom_m_bits,
-                k=self.bloom_k,
-            )
-        else:
-            dangling = media.join(
-                F.broadcast(catalog_keys), "media_ref", "left_anti"
-            )
+        dangling = media.join(
+            asset_catalog.select("media_ref"), "media_ref", "left_anti"
+        )
         return dangling.select(
             "partition_id",
             "doc_id",

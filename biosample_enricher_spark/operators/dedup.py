@@ -1001,7 +1001,14 @@ def prefix_filtered_jaccard(
     (``den·|A∩B| ≥ num·|A∪B|``) — no float boundary, bit-identical
     verdicts in any ANSI-SQL oracle. Returns
     ``(id_a, id_b, n_inter, n_a, n_b, jaccard)`` with ``id_a < id_b``;
-    ``jaccard`` is one exact-integer division.
+    ``jaccard`` is one exact-integer division. ``shingles`` must hold
+    distinct elements per row (see ``prefix_filtered_jaccard_from``).
+
+    The result is EAGER and lineage-free: it is a materialized
+    ``localCheckpoint`` with no plan to recompute it from, so a lost
+    executor loses its blocks. The caller owns those blocks and frees
+    them with ``free_local_checkpoint`` once the result is no longer
+    read (``unpersist()`` does not reach them).
 
     Reference analog: set-based duplicate semantics of
     ``/root/reference/biosample_enricher/adapters.py:327-338``, here
@@ -1022,6 +1029,14 @@ def prefix_filtered_jaccard_from(
     """``prefix_filtered_jaccard`` over a pre-built ``(doc_id, sh)``
     shingled frame.
 
+    Precondition: every ``sh`` array holds DISTINCT shingles
+    (``token_bigrams``/``distinct_ngrams`` output does; otherwise wrap
+    it in ``array_distinct``). ``|A∩B|`` is read off
+    ``array_intersect``, which deduplicates, while ``n_a``/``n_b`` are
+    plain array sizes, so repeated elements would inflate the union
+    and understate ``jaccard``; the prefix lengths would be computed
+    from the inflated sizes too.
+
     r6 shape (guide §5 + §2.3). The construction consumes the shingle
     checkpoint from five subtrees — sizes, the exploded index (feeding
     doc-frequency and the rank join inside the prefix build), and the
@@ -1040,10 +1055,9 @@ def prefix_filtered_jaccard_from(
     ARRAYS and computes ``|A∩B|`` with one ``array_intersect`` per pair
     — replacing the exploded index⋈index join + groupBy whose
     intermediate was Σ|A| over candidate pairs (~35M skinny rows at
-    sf0.1, the old query's dominant shuffle; arrays are distinct by
-    construction so intersection size is the exact overlap count). The
-    size joins disappear too: ``n_a``/``n_b`` read off the attached
-    arrays.
+    sf0.1, the old query's dominant shuffle; with distinct arrays the
+    intersection size is the exact overlap count). The size joins
+    disappear too: ``n_a``/``n_b`` read off the attached arrays.
 
     Returns an EAGER (checkpointed) frame: the result is materialized,
     then the shingle checkpoint is freed before returning — repeated

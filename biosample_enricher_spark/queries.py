@@ -489,8 +489,9 @@ def j3_referential_antijoin(spark, sf_dir):
     key set (adapters.py:610-640 $in lookups). r6: the explicit
     broadcast hint is gone — customer scales with the corpus, so the
     strategy is left to size-based planning (auto-broadcast at demo
-    SF; at catalog-past-broadcast scale the engine's bloom tier,
-    operators/bloom.py, is the designed pre-filter)."""
+    SF, a shuffled anti-join past broadcast size), as in the suite's
+    referential check. A Bloom pre-filter for that scale is the
+    operators/bloom.py operator, run by ``v6_bloom_referential``."""
     e = t(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     c = t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("user_id"))
     return e.select("user_id").join(c, "user_id", "left_anti").distinct()

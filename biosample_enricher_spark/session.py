@@ -1,10 +1,13 @@
 """SparkSession factory tuned for the validation engine.
 
-Defaults follow the scale posture in SURVEY.md §4: AQE on (runtime
-re-plan + skew-join splitting), Arrow on (vectorized JVM<->Python
-batches for the two pandas UDFs), nested-schema pruning on (constraint
-expressions touch few struct fields of ``spans``), shuffle partitions
-sized to cores rather than the 200 default.
+The engine relies on Spark's defaults for the scale posture in SURVEY.md
+§4 and sets them nowhere: AQE with partition coalescing and skew-join
+splitting, nested-schema pruning (constraint expressions touch few
+struct fields of ``spans``) and 10,000-row Arrow batches. The session
+sets only what differs from a bare session: Arrow for pandas
+conversion, shuffled-hash join preference, shuffle partitions sized to
+cores rather than the 200 default, a UTC session time zone (the default
+is the JVM's zone), no UI and the driver memory.
 
 On a real cluster the same builder is used by ``spark-submit
 --py-files``; only ``master`` and memory sizing differ.
@@ -39,9 +42,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Prefer shuffled-hash over sort-merge when the per-partition
         # build side fits (guide §3.1): drops both sort passes from
         # equi-joins like j4. Scale posture: the planner still falls
@@ -53,8 +53,6 @@ def get_spark(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m"
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
@@ -78,13 +76,10 @@ def _prewarm_python_workers(spark: SparkSession) -> bool:
     once" applied to the pool itself, the same reason
     ``spark.python.worker.reuse`` keeps workers alive afterwards. The
     warm-up job touches no user data (a ``spark.range`` over the
-    core count) and caches nothing; disable with
-    ``SPARK_GRAFT_PREWARM=0``. Failures are non-fatal — the pool then
-    initializes lazily exactly as before. Returns True iff the warm-up
-    job actually ran (pinned by tests/test_session_prewarm.py — this
-    job has silently no-op'd twice; never trust it unverified)."""
-    if os.environ.get("SPARK_GRAFT_PREWARM", "1") == "0":
-        return False
+    core count) and caches nothing. Failures are non-fatal — the pool
+    then initializes lazily exactly as before. Returns True iff the
+    warm-up job actually ran (pinned by tests/test_session_prewarm.py —
+    this job has silently no-op'd twice; never trust it unverified)."""
     try:
         import pandas as pd
         from pyspark.sql import functions as F

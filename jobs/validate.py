@@ -53,11 +53,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--synthesize", type=int, metavar="N_DOCS",
                    help="ignore --input path contents and synthesize N "
                         "documents deterministically (demo/bench mode)")
-    p.add_argument("--referential-bloom", action="store_true",
-                   help="referential check via the Bloom pre-filter "
-                        "tier (operators/bloom.py) instead of the exact "
-                        "broadcast anti-join — for catalogs past "
-                        "broadcast size; output provably identical")
     p.add_argument("--sketch-distinct", action="store_true",
                    help="write per-partition HLL distinct sketches for "
                         "doc_id to the <checkpoint>_sketches sidecar and "
@@ -78,13 +73,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         p.error("one of --input or --synthesize is required")
     if args.streaming and (not args.input or not args.violations_out):
         p.error("--streaming requires --input and --violations-out")
-    if args.referential_bloom and args.streaming:
-        p.error("--referential-bloom has no effect under --streaming "
-                "(the streaming tier runs row-scope constraints only)")
-    if args.referential_bloom and not (args.catalog or args.synthesize):
-        p.error("--referential-bloom requires a catalog source "
-                "(--catalog, or --synthesize which generates one) — "
-                "without one no referential check runs at all")
     return args
 
 
@@ -129,8 +117,8 @@ def main(argv: list[str]) -> None:
         params = GenParams(seed=42)
         docs = gen_documents(spark, args.synthesize, params)
         # the generator's catalog is deterministic from the same params —
-        # synthesize it too so the referential tier (broadcast or bloom)
-        # is exercised unless the caller supplies an explicit catalog
+        # synthesize it too so the referential check is exercised
+        # unless the caller supplies an explicit catalog
         catalog = (
             spark.read.parquet(args.catalog)
             if args.catalog
@@ -143,7 +131,6 @@ def main(argv: list[str]) -> None:
     suite = ConstraintSuite(
         n_buckets=args.n_buckets,
         use_arrow_udf=args.arrow_udf,
-        referential_mode="bloom" if args.referential_bloom else "broadcast",
     )
     run = ResumableRun(
         spark,

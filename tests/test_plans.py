@@ -54,6 +54,30 @@ def test_referential_is_broadcast_left_anti(spark):
     assert "BroadcastHashJoin" in p and "LeftAnti" in p
 
 
+def test_referential_join_strategy_follows_broadcast_threshold(spark):
+    """The referential anti-join carries no broadcast hint: with
+    broadcasting switched off the planner must fall back to a shuffled
+    anti-join (also after AQE re-planning) and return the same rows."""
+    docs = gen_documents(spark, 200, GenParams(seed=1))
+    cat = gen_asset_catalog(spark, GenParams(seed=1))
+    suite = ConstraintSuite()
+
+    def rows():
+        df = suite.referential_violations(suite.with_partition_id(docs), cat)
+        return sorted(map(tuple, df.collect())), plan(df)
+
+    expected, _ = rows()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        got, p = rows()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" not in p and "LeftAnti" in p
+    assert expected and got == expected
+
+
 def test_global_topn_avoids_full_sort(spark):
     p = plan(QUERIES["o1_global_topn"](spark, SF))
     assert "TakeOrderedAndProject" in p

@@ -36,14 +36,8 @@ def _daemon_count() -> int:
     return n
 
 
-def test_prewarm_executes_udf_job(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_PREWARM", "1")
+def test_prewarm_executes_udf_job(spark):
     assert _prewarm_python_workers(spark) is True
     # the warm-up spawned (or reused) the worker pool: the daemon that
     # forks per-task workers is alive
     assert _daemon_count() >= 1
-
-
-def test_prewarm_disabled_by_env(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_PREWARM", "0")
-    assert _prewarm_python_workers(spark) is False

@@ -370,30 +370,6 @@ def test_funnel_causality_traps_on_planted_data(spark):
     }
 
 
-def test_bloom_referential_mode_equals_broadcast_mode(spark):
-    """The suite's bloom referential tier must emit exactly the
-    broadcast tier's violation rows on the dirty synthetic corpus
-    (dangling refs planted by the generator)."""
-    docs = gen_documents(spark, 600, GenParams(seed=4, n_assets=150))
-    cat = gen_asset_catalog(spark, GenParams(seed=4, n_assets=150))
-    exact = ConstraintSuite()
-    bloom = ConstraintSuite(referential_mode="bloom", bloom_m_bits=1 << 16)
-    key = lambda r: (r.partition_id, r.doc_id, r.field, r.message)
-    a = sorted(
-        key(r)
-        for r in exact.referential_violations(
-            exact.with_partition_id(docs), cat
-        ).collect()
-    )
-    b = sorted(
-        key(r)
-        for r in bloom.referential_violations(
-            bloom.with_partition_id(docs), cat
-        ).collect()
-    )
-    assert a and a == b
-
-
 def test_winsorized_stats_match_numpy(spark):
     """a32's rank-defined winsorization (clamp at the ceil(0.05n)-th /
     ceil(0.95n)-th order statistics) against a direct numpy model on
